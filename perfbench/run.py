@@ -305,6 +305,11 @@ def write_result(args, context, metrics, tables) -> None:
                   fh, indent=1, default=str)
     if tables:
         with open(stem + ".txt", "w") as fh:
+            fh.write("tracing overhead {:+.1f}% ({:.0f} docs/s traced, {:.0f} "
+                     "untraced)\n\n".format(
+                         *(metrics[k]["value"] for k in (
+                             "trace.overhead_pct", "trace.docs_per_s",
+                             "trace.untraced_docs_per_s"))))
             for name, rows in tables.items():
                 fh.write(f"== {name}\n{format_table(rows)}\n\n")
 
